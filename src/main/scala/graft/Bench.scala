@@ -5,6 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE COMPACT JSON line on stdout.
   *
+  * `SPARK_GRAFT_ONLY=<name>[,<name>...]` runs only those entries: the
+  * isolated per-query timing loop, with the same warm-up and median.
+  *
   * Queries are materialized with a noop-format write — unlike `count()`,
   * this executes the full plan including all aggregate/projection work
   * (count() lets Catalyst prune unused aggregates, under-reporting).
@@ -29,47 +32,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_list aggs (report counters) fall back to sort-based after
-      // 128 in-memory keys by default — far too conservative for small
-      // per-key buffers; keep them hash-based.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // Static conf, default 100 entries: even a 40-query shard generates
-      // several hundred whole-stage classes; 5000 holds a shard's worth
-      // many times over, so warm passes never recompile (verified by the
-      // per-pass cumulative compile-count lines on stderr).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // NOTE: spark.cleaner.periodicGC.interval stays at its 30-minute
-      // default ON PURPOSE: a short interval forces full driver GCs
-      // DURING timed queries (measured +30 s of roving spikes across a
-      // full run). The per-shard scope + synchronous unpersist below
-      // drain the ContextCleaner backlog at untimed safe points instead.
-      .config("spark.sql.adaptive.enabled", "true")
-      // testdata parquet files are single-digit-MB; default 128 MB split
-      // size scans each as ONE partition, serializing every query. At real
-      // scale the default is correct — this is local-bench parallelization.
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Unpersisting a localCheckpoint'ed RDD (the between-query cleanup
-    // below) logs a WARN per RDD ("lineage has been truncated and cannot
-    // be recomputed") — correct but irrelevant here since no query ever
-    // re-reads another query's checkpoint. Drop that logger to ERROR.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional comma-separated query filter (dev profiling loop).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
@@ -86,6 +50,7 @@ object Bench {
 
     // name -> per-pass samples (median taken after)
     val allSamples = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val coldSamples = scala.collection.mutable.Map[String, Double]()
 
     // Host-load attribution (additions-only; the stdout contract is
     // unchanged): /proc/loadavg read at each timed pass's start and end
@@ -99,7 +64,7 @@ object Bench {
     val passLoads = scala.collection.mutable.ArrayBuffer[String]()
 
     shards.zipWithIndex.foreach { case (shard, si) =>
-      val spark = buildSession(cpus)
+      val spark = GraftSession.local()
       // Uncounted FULL warmup pass: every query in the shard runs once,
       // discarded, before any timed pass. A first-query-only warmup
       // (r10) left each query's own codegen compilation inside its
@@ -117,11 +82,15 @@ object Bench {
           .filterNot(r => keep.contains(r.id))
           .foreach(_.unpersist(blocking = true))
       }
+      // Its wall time is kept per entry as "cold" in BENCH_DETAIL.json:
+      // the first-run cost the warm medians leave out.
       shard.foreach { case (name, fn) =>
+        val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
         }
+        coldSamples(name) = (System.nanoTime() - t0) / 1e9
         sweepPersisted()
       }
       // Untimed GC between warmup and timed passes: warmup allocation
@@ -181,6 +150,7 @@ object Bench {
       val raw = xs.map(t => f"$t%.3f").mkString("[", ",", "]")
       "\"" + k + "\":{\"median\":" + f"${median(xs)}%.3f" +
         ",\"min\":" + f"${xs.min}%.3f" +
+        ",\"cold\":" + f"${coldSamples(k)}%.3f" +
         ",\"samples\":" + raw + "}"
     }.mkString("{", ",", "}")
     System.err.println(s"[bench] per-query seconds: $full")

@@ -30,27 +30,9 @@ object GraftApp {
     if (path.endsWith(".mmdb")) Mmdb.fromMmdb(spark, path)
     else GeoIp.fromCsv(spark, path)
 
-  def session(appName: String = "graft"): SparkSession = {
-    val b = SparkSession.builder()
-      .appName(appName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // report counters use collect_list; the default ObjectHashAggregate
-      // fallback (sort-based after 128 in-memory keys) is far too
-      // conservative for small per-key buffers
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-    // under spark-submit the master comes from the launcher; standalone
-    // runs (tests, local smoke) fall back to all local cores
-    val withMaster =
-      if (sys.props.contains("spark.master")) b else b.master("local[*]")
-    val s = withMaster.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = args.toList match {
     case "--geo" :: geoCsv :: eventsPath :: outPath :: Nil =>
-      val spark = session("graft-geo-backfill")
+      val spark = GraftSession.service("graft-geo-backfill")
       val (refreshed, changed) = GeoIp.backfill(
         spark.read.parquet(eventsPath), geoSource(spark, geoCsv))
       val total = refreshed.count()
@@ -61,7 +43,7 @@ object GraftApp {
       spark.stop()
 
     case "--rdns" :: eventsPath :: outPath :: Nil =>
-      val spark = session("graft-rdns-backfill")
+      val spark = GraftSession.service("graft-rdns-backfill")
       val events = spark.read.parquet(eventsPath)
       val refreshed = ReverseDns.backfill(events)
       val total = refreshed.count()
@@ -71,7 +53,7 @@ object GraftApp {
       spark.stop()
 
     case configPath :: eventsPath :: checkpointRoot :: reportDir :: rest =>
-      val spark = session()
+      val spark = GraftSession.service("graft")
       val conf = GraftConfig.load(configPath) // fail-fast regex/token checks
       val geo = rest.headOption.map(geoSource(spark, _))
       val streams = Ingest.startAll(spark, conf, eventsPath, checkpointRoot, geo)

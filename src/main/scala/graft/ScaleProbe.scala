@@ -286,30 +286,18 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sf01 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val synthDir = s"/tmp/graft-synth-x$Copies"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      // Weak scaling sizes the shuffle width WITH the data, as a real
-      // cluster would (1 partition per core at 10x, proportionally more
-      // waves beyond): holding 32 partitions constant at 30-60x pushes
-      // per-partition shuffle volumes past executor memory and the
-      // resulting spill knee reads as a fake superlinear term (measured:
-      // rag_chunk_retrieve x60 ratio 80.5 at 32 partitions, near-linear
-      // once partitions scale). AQE still coalesces small stages.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS",
-          math.max(32, 32 * Copies / 10).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local()
+    // Weak scaling sizes the shuffle width WITH the data, as a real
+    // cluster would (1 partition per core at 10x, proportionally more
+    // waves beyond): holding the width constant at 30-60x pushes
+    // per-partition shuffle volumes past executor memory and the
+    // resulting spill knee reads as a fake superlinear term (measured:
+    // rag_chunk_retrieve x60 ratio 80.5 at 32 partitions, near-linear
+    // once partitions scale). AQE still coalesces small stages.
+    val cores = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_PARTS",
+        math.max(cores, cores * Copies / 10).toString))
     synth(spark, sf01, synthDir)
 
     val probes: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(

@@ -47,13 +47,12 @@ object T {
 
   /** Spread a small input across cores before a compute-heavy narrow
     * stage — SCALE-ADAPTIVELY. The width is a function of the estimated
-    * input size, never a constant: one task per `spark.graft.par.minBytesPerTask`
-    * (default 64 KiB; SPARK_GRAFT_PAR_MINBYTES overrides for probes) of
-    * estimated input, clamped to [1, defaultParallelism].
+    * input size, never a constant: one task per [[MinBytesPerTask]]
+    * (64 KiB) of estimated input, clamped to [1, defaultParallelism].
     * At production scale any real relation estimates far past
-    * cores × minBytes, so the clamp makes this identical to the old
+    * cores × 64 KiB, so the clamp makes this identical to the old
     * unconditional repartition(defaultParallelism); on kilobyte-sized
-    * inputs the fan-out (and for sub-minBytes inputs the exchange itself)
+    * inputs the fan-out (and for sub-64 KiB inputs the exchange itself)
     * is pure per-task fixed cost and is skipped. Measured r16: the whole
     * 361-entry bench ran 322 s on 32 cores vs 250 s on 8 — per-task
     * scheduling overhead on ~18 KB tasks buried the tail (guide §2
@@ -77,24 +76,17 @@ object T {
     * correct at every scale. */
   def par(spark: SparkSession, df: DataFrame): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
-    val n = parWidth(spark, df, cores)
-    if (n <= 1) df else df.repartition(n)
-  }
-
-  /** Adaptive width: ceil(estimatedBytes / minBytesPerTask) clamped to
-    * [1, cores]. Unknown/huge estimates clamp to full width. */
-  private[graft] def parWidth(spark: SparkSession, df: DataFrame,
-      cores: Int): Int = {
-    val minBytes = spark.conf
-      .getOption("spark.graft.par.minBytesPerTask")
-      .orElse(sys.env.get("SPARK_GRAFT_PAR_MINBYTES"))
-      .map(_.toLong).getOrElse(64L << 10)
+    // unknown/huge estimates clamp to full width
     val bytes =
       try df.queryExecution.analyzed.stats.sizeInBytes
       catch { case _: Throwable => BigInt(Long.MaxValue) }
-    if (bytes >= BigInt(minBytes) * cores) cores
-    else math.max(1, ((bytes + minBytes - 1) / minBytes).toInt)
+    val n =
+      if (bytes >= BigInt(MinBytesPerTask) * cores) cores
+      else math.max(1, ((bytes + MinBytesPerTask - 1) / MinBytesPerTask).toInt)
+    if (n <= 1) df else df.repartition(n)
   }
+
+  private val MinBytesPerTask = 64L << 10
 
   /** Full-width fan-out for CPU-BOUND narrow kernels (the pre-r17
     * unconditional [[par]]): per-row cost dwarfs bytes, so the byte

@@ -4,18 +4,10 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** SparkSessionExtensions entry point: registers graft's custom codegen
-  * expressions as SQL functions in every session built with
-  *
-  * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new graft.functions.GraftExtensions)  // or
-  *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * }}}
-  *
-  * This is the deployment-grade registration path (cluster-wide via conf,
-  * no per-session imperative `register` call); `GraftFunctions.register`
-  * remains for ad-hoc sessions.
+/** SparkSessionExtensions entry point: registers graft's optimizer rules
+  * and custom codegen expressions as SQL functions in every session built
+  * by [[graft.GraftSession]], or elsewhere with
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

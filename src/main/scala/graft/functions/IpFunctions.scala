@@ -91,10 +91,4 @@ case class IpToNum(child: Expression) extends UnaryExpression {
 object GraftFunctions {
 
   def ip_to_num(c: Column): Column = shim.column(IpToNum(shim.expression(c)))
-
-  /** Register SQL-callable versions (`SELECT ip_to_num(addr) …`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ip_to_num", exprs => IpToNum(exprs.head), "built-in")
-  }
 }

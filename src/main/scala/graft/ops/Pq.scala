@@ -51,7 +51,9 @@ object Pq {
       iters: Int = 3, idCol: String = "vec_id",
       vecCol: String = "embedding"): Array[Array[Array[Long]]] = {
     require(m > 0 && k > 0 && iters >= 0, "m, k positive; iters >= 0")
-    val seeds = corpus
+    // null vectors take no part in training (neither seed nor fold)
+    val vecs = corpus.filter(col(vecCol).isNotNull)
+    val seeds = vecs
       .select(md5(col(idCol).cast("string")).as("__h"), col(vecCol))
       .orderBy(col("__h"))
       .limit(k)
@@ -70,7 +72,7 @@ object Pq {
     // (assignment: subDist over floats == subDistMicro over the micro'd
     // elements; update sums: floor(x·10⁶)+Offset either way).
     foldTrainMicro(
-      corpus.select(col(vecCol)).queryExecution.toRdd
+      vecs.select(col(vecCol)).queryExecution.toRdd
         .map { r =>
           val a = r.getArray(0)
           val dimN = a.numElements()
@@ -293,7 +295,8 @@ object Pq {
     * [[trainPqCodebooksMicro]]. */
   private def trainOnMicro(corpusMicro: DataFrame, m: Int, k: Int,
       iters: Int): Array[Array[Array[Long]]] = {
-    val seeds = corpusMicro
+    val vecs = corpusMicro.filter(col("__vm").isNotNull)
+    val seeds = vecs
       .select(md5(col("__id").cast("string")).as("__h"), col("__vm"))
       .orderBy(col("__h"))
       .limit(k)
@@ -310,7 +313,7 @@ object Pq {
     // (residual join / permutation projection) runs ONCE into the
     // persisted RDD instead of once per iteration.
     foldTrainMicro(
-      corpusMicro.select(col("__vm")).queryExecution.toRdd
+      vecs.select(col("__vm")).queryExecution.toRdd
         .map(_.getArray(0).toLongArray()),
       books, m, k, subDim, iters)
   }
@@ -406,12 +409,13 @@ object Pq {
   }
 
   /** Micro-unit permuted-vector column: slot j holds
-    * floor(v(perm(j))·10⁶) — the input to permuted PQ train/encode. */
+    * floor(v(perm(j))·10⁶) — the input to permuted PQ train/encode.
+    * NULL for a null vector. */
   def permutedMicro(vecCol: String, perm: Array[Int]): Column = {
     val slots = perm.map(d =>
       floor(element_at(col(vecCol), d + 1).cast("double") * lit(1000000.0))
         .cast("long"))
-    array(slots: _*)
+    when(col(vecCol).isNotNull, array(slots: _*))
   }
 
   /** Train PQ codebooks over the PERMUTED micro vectors — compose with

@@ -89,7 +89,13 @@ object Reporter {
       singleFile: Boolean = true): String = {
     val out = s"$dir/${fileName(now)}"
     val df = if (singleFile) report.coalesce(1) else report
-    df.write.option("header", "true").mode("overwrite").csv(out)
+    // Overwrite by deleting first: Spark's own overwrite of an existing
+    // directory rebuilds its path from the name, and the ':' of the
+    // ISO-8601 stamp then reads as a URI scheme (URISyntaxException).
+    val path = new org.apache.hadoop.fs.Path(out)
+    path.getFileSystem(report.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(path, true)
+    df.write.option("header", "true").csv(out)
     out
   }
 

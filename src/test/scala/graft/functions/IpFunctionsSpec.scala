@@ -43,7 +43,7 @@ class IpToNumSparkSpec extends SparkSpec {
   }
 
   test("ip_to_num registered for SQL") {
-    register(spark)
+    // by GraftExtensions, which every GraftSession carries
     import spark.implicits._
     Seq("1.2.3.4").toDF("a").createOrReplaceTempView("ips")
     val r = spark.sql("SELECT ip_to_num(a) AS n FROM ips").head()

@@ -70,6 +70,13 @@ class PqSpec extends SparkSpec {
       emb.select(sum(Pq.selfDistortion(emb, b)).as("t")).head().getLong(0)
     assert(total(books) <= total(seedBooks),
       "Lloyd iterations must not increase the quantization objective")
+    // a null vector is dropped from training: same codebooks as without it
+    val withNull = emb.unionByName(emb.limit(1)
+      .withColumn("vec_id", lit(-1).cast(emb.schema("vec_id").dataType))
+      .withColumn("embedding", lit(null).cast(emb.schema("embedding").dataType)))
+    val nullBooks = Pq.trainPqCodebooksMicro(withNull, m = 16, k = 32, iters = 3)
+    assert(nullBooks.map(_.map(_.toSeq).toSeq).toSeq ==
+      books.map(_.map(_.toSeq).toSeq).toSeq)
   }
 
   test("IVF-PQ ranks exactly the probed candidates, in ADC order") {
@@ -219,5 +226,10 @@ class PqSpec extends SparkSpec {
     val bP = Pq.trainPermutedPqCodebooksMicro(skewed, perm, m = 2, k = 4, iters = 3)
     val (dN, dP) = (distortion(bN, natural), distortion(bP, perm))
     assert(dP < dN, s"permuted distortion $dP must beat natural $dN")
+    // a null vector is dropped from training: same codebooks as without it
+    val withNull = skewed.union(
+      Seq[(Long, Seq[Float])]((-1L, null)).toDF("vec_id", "embedding"))
+    val bNull = Pq.trainPermutedPqCodebooksMicro(withNull, perm, m = 2, k = 4, iters = 3)
+    assert(bNull.map(_.map(_.toSeq).toSeq).toSeq == bP.map(_.map(_.toSeq).toSeq).toSeq)
   }
 }

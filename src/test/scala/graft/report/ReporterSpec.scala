@@ -42,6 +42,14 @@ class ReporterSpec extends SparkSpec {
     val lines = scala.io.Source.fromFile(files.head).getLines().toSeq
     assert(lines.head == "address,country_code,country_name,total_events,counters")
     assert(lines.length == 3)
+    // a second report stamped in the same second overwrites the first
+    val now = java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC)
+    val first = Reporter.writeCsv(Reporter.report(mkEvents()), dir, now)
+    val again = Reporter.writeCsv(Reporter.report(mkEvents().limit(1)), dir, now)
+    assert(again == first)
+    val rewritten = new java.io.File(again).listFiles().filter(_.getName.endsWith(".csv"))
+    assert(rewritten.length == 1)
+    assert(scala.io.Source.fromFile(rewritten.head).getLines().length == 2)
   }
 
   test("country summary + tweet text (A5, O2, O3, F10, F11)") {

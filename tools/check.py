@@ -2,17 +2,22 @@
 """Local replica of the driver's correctness gate (dev feedback loop only —
 the shipped Scala library does not depend on this).
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 
 Reads each <verifyOutDir>/<name> parquet (Spark result), runs the matching
 oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the sfDir
-tables, sorts columns by name and rows by all columns, and compares values.
+tables (a table whose parquet file is absent is skipped), sorts columns by
+name and rows by all columns, and compares values exactly. Query names, if
+given, restrict the check to those entries. Each entry's verdict is written
+to <verifyOutDir>/correctness.json in the driver's CORRECTNESS shape
+(rows_match / schema_match / hash_match / spark_rows / oracle_rows / err).
+Exits non-zero if any checked entry fails.
 """
-import json, sys, math
+import json, math, os, platform, sys
 import duckdb
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+TABLES = ["region", "nation", "customer", "supplier", "part", "partsupp",
+          "orders", "lineitem", "events", "documents", "embeddings"]
 
 def canon(rows, cols):
     # sort columns by name, then rows by stringified values
@@ -55,61 +60,73 @@ def lint_types(con, out_dir, name, sql):
             errs.append(f"{c}: oracle {t} vs spark {stypes.get(c)}")
     return errs
 
-def main(sf_dir, out_dir):
-    import platform
+def check(con, out_dir, name, sql):
+    """One entry's verdict record."""
+    r = {"rows_match": False, "schema_match": False, "hash_match": False,
+         "err": None}
+    if sql is None:
+        r["err"] = "no oracle SQL"
+        return r
+    if not os.path.isdir(f"{out_dir}/{name}"):
+        r["err"] = "no spark output"
+        return r
+    try:
+        got = con.execute(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
+        gcols = [d[0] for d in got.description]
+        grows = got.fetchall()
+        exp = con.execute(sql)
+        ecols = [d[0] for d in exp.description]
+        erows = exp.fetchall()
+    except Exception as e:
+        r["err"] = f"exec error: {type(e).__name__}: {e}"[:400]
+        return r
+    gc, gr = canon(grows, gcols)
+    ec, er = canon(erows, ecols)
+    r["spark_rows"], r["oracle_rows"] = len(gr), len(er)
+    r["rows_match"] = len(gr) == len(er)
+    r["schema_match"] = gc == ec
+    if not r["schema_match"]:
+        r["err"] = f"schema mismatch spark={gc} oracle={ec}"
+        return r
+    if not r["rows_match"]:
+        r["err"] = f"rowcount spark={len(gr)} oracle={len(er)}"
+        return r
+    for i, (a, b) in enumerate(zip(gr, er)):
+        if not all(eq(x, y) for x, y in zip(a, b)):
+            r["err"] = f"row {i} spark={a} oracle={b}"
+            return r
+    # value-equal rows can still hash differently in a typed harness
+    try:
+        terrs = lint_types(con, out_dir, name, sql)
+    except Exception as e:
+        terrs = [f"lint error: {e}"]
+    if terrs:
+        r["err"] = f"oracle type lint: {terrs}"
+        return r
+    r["hash_match"] = True
+    return r
+
+def main(sf_dir, out_dir, only):
     print(f"oracle env: duckdb={duckdb.__version__} "
           f"python={platform.python_version()} {platform.platform()}")
     con = duckdb.connect()
     for t in TABLES:
-        try:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-        except Exception as e:
-            print(f"[warn] view {t}: {e}")
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    npass = nfail = 0
-    for name, sql in sorted(oracle.items()):
-        try:
-            got = con.execute(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
-            gcols = [d[0] for d in got.description]
-            grows = got.fetchall()
-            exp = con.execute(sql)
-            ecols = [d[0] for d in exp.description]
-            erows = exp.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: exec error: {e}")
-            nfail += 1
-            continue
-        try:
-            terrs = lint_types(con, out_dir, name, sql)
-        except Exception as e:
-            terrs = [f"lint error: {e}"]
-        if terrs:
-            print(f"FAIL {name}: oracle type lint: {terrs}")
-            nfail += 1
-            continue
-        gc, gr = canon(grows, gcols)
-        ec, er = canon(erows, ecols)
-        if gc != ec:
-            print(f"FAIL {name}: schema mismatch spark={gc} oracle={ec}")
-            nfail += 1
-            continue
-        if len(gr) != len(er):
-            print(f"FAIL {name}: rowcount spark={len(gr)} oracle={len(er)}")
-            nfail += 1
-            continue
-        bad = None
-        for i, (a, b) in enumerate(zip(gr, er)):
-            if not all(eq(x, y) for x, y in zip(a, b)):
-                bad = (i, a, b)
-                break
-        if bad:
-            print(f"FAIL {name}: row {bad[0]} spark={bad[1]} oracle={bad[2]}")
-            nfail += 1
+    results = {}
+    for name in sorted(only or oracle):
+        r = results[name] = check(con, out_dir, name, oracle.get(name))
+        if r["hash_match"]:
+            print(f"PASS {name} ({r['spark_rows']} rows)")
         else:
-            print(f"PASS {name} ({len(gr)} rows)")
-            npass += 1
-    print(f"== {npass} pass / {nfail} fail")
-    return 1 if nfail else 0
+            print(f"FAIL {name}: {r['err']}")
+    with open(f"{out_dir}/correctness.json", "w") as f:
+        json.dump(results, f, indent=1)
+    npass = sum(r["hash_match"] for r in results.values())
+    print(f"== {npass} pass / {len(results) - npass} fail")
+    return 1 if npass < len(results) else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2], set(sys.argv[3:])))
